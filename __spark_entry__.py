@@ -597,10 +597,12 @@ def q_quarantine_rows(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_group_violations_scalable(spark: SparkSession, sf: str) -> DataFrame:
     """The skew-resilient ordered-check path (ordered.py: range
-    repartition + mapInPandas + driver boundary carry) on a defect-rich
-    transcripts view of lineitem: turn_idx = l_linenumber % 3 injects
-    deterministic duplicate keys AND gaps; shipdate disorder across turn
-    buckets injects monotonicity violations."""
+    partitions carried like increments — per-segment boundary summaries,
+    a window fold into carriers, the fused window pass per segment) on
+    a defect-rich transcripts view of lineitem: turn_idx =
+    l_linenumber % 3 injects deterministic duplicate keys AND gaps;
+    shipdate disorder across turn buckets injects monotonicity
+    violations."""
     from ocsf_validator_spark.ordered import scalable_group_violations
 
     li = _t(spark, sf, "lineitem")
@@ -648,47 +650,52 @@ def q_suite_verdicts(
     )
 
 
-def _vd_observed_stats(ev: DataFrame, cov_vals: list) -> tuple[dict, dict]:
+def _vd_observed_stats(t: DataFrame, cov: list) -> tuple[dict, dict]:
     """ONE stats scan feeds BOTH of verdict_diff's runs: per
     (bucket, even-half) group, the observed-bucket bit and the
-    enum-coverage set ride the same bounded aggregation (<=16 groups),
+    enum-coverage sets ride the same bounded aggregation (<=16 groups),
     replacing the four separate full scans the two runs used to pay
     (2x observed-bucket distinct + 2x dataset_findings coverage agg).
     The per-half values are IDENTICAL to the per-run scans by
-    construction: role comes 1:1 from event_type, the parity predicate
-    on the derived conv_id is the same expression, and rows whose
-    parity is NULL (uncastable conv_id) fall only into the full run —
-    exactly what the filtered scan's NULL-dropping WHERE did.
+    construction: the parity predicate on conv_id is the same
+    expression, and rows whose parity is NULL (uncastable conv_id) fall
+    only into the full run — exactly what the filtered scan's
+    NULL-dropping WHERE did. ``t`` is the transcripts view; only
+    columns are read from it, so its turn_idx window is pruned away.
 
     Returns ({half: observed_bucket_list}, {half: observed_enums dict})
     keyed by half=True for the even-conversation run, False for the
-    full run (tests/test_driver_contract.py pins equality with the
-    naive per-half scans)."""
+    full run; observed_enums is keyed by each EnumCoverage constraint's
+    column (tests/test_driver_contract.py pins equality with the naive
+    per-half scans)."""
     stat_rows = (
-        ev.select(F.col("user_id").cast("string").alias("conv_id"), "event_type")
-        .select(
+        t.select(
             md5_bucket_col("conv_id", 8).alias("b"),
             F.coalesce(
                 F.expr("CAST(conv_id AS BIGINT) % 2 = 0"), F.lit(False)
             ).alias("g"),
-            F.col("event_type").alias("role"),
+            *[
+                F.when(F.col(c.column).isin(*c.values), F.col(c.column)).alias(
+                    f"_o{i}"
+                )
+                for i, c in enumerate(cov)
+            ],
         )
         .groupBy("b", "g")
-        .agg(
-            F.collect_set(
-                F.when(F.col("role").isin(*cov_vals), F.col("role"))
-            ).alias("obs")
-        )
+        .agg(*[F.collect_set(f"_o{i}").alias(f"_o{i}") for i in range(len(cov))])
         .collect()
     )
     obs_buckets = {
         True: sorted({int(r["b"]) for r in stat_rows if r["g"]}),
         False: sorted({int(r["b"]) for r in stat_rows}),
     }
-    obs_enums = {
-        True: {"role": {v for r in stat_rows if r["g"] for v in r["obs"]}},
-        False: {"role": {v for r in stat_rows for v in r["obs"]}},
-    }
+    obs_enums: dict = {True: {}, False: {}}
+    for half in (True, False):
+        rows = [r for r in stat_rows if r["g"] or not half]
+        for i, c in enumerate(cov):
+            obs_enums[half].setdefault(c.column, set()).update(
+                v for r in rows for v in r[f"_o{i}"]
+            )
     return obs_buckets, obs_enums
 
 
@@ -700,15 +707,8 @@ def q_verdict_diff(spark: SparkSession, sf: str) -> DataFrame:
     change-proportional at any scale."""
     t = _transcripts(spark, sf)
     suite = _events_suite()
-    ev = _t(spark, sf, "events")
-
-    cov_vals = [
-        v
-        for c in suite.constraints
-        if type(c).__name__ == "EnumCoverage"
-        for v in c.values
-    ]
-    obs_buckets, obs_enums = _vd_observed_stats(ev, cov_vals)
+    cov = [c for c in suite.constraints if isinstance(c, EnumCoverage)]
+    obs_buckets, obs_enums = _vd_observed_stats(t, cov)
 
     def _vd(pred: str | None) -> DataFrame:
         tt = t.filter(pred) if pred else t

@@ -6,9 +6,13 @@ increment, or a turn gap / ts regression straddling the increment
 boundary, is silently missed. The streaming leg already solves exactly
 this with per-conversation carried state
 (streaming.stateful_ordering_violations); this module is the batch-side
-equivalent: persist each conversation's BOUNDARY SUMMARY (the same
-summary ordered.py's Phase A computes per partition) into the
+equivalent: persist each conversation's BOUNDARY SUMMARY into the
 checkpoint, and seed the next increment's fused window checks with it.
+
+The skew path (ordered.py) reuses the same three pieces with range
+partitions in the role of increments: ``boundary_state`` per
+(conversation, segment), a window fold equal to ``merge_state`` over
+the earlier segments, and ``attach_carriers`` into the window pass.
 
 State per conversation (one narrow row):
 
@@ -77,6 +81,7 @@ def boundary_state(
     cs: list,
     ties: list[str],
     keys=("conv_id", "turn_idx"),
+    segment: str | None = None,
 ) -> DataFrame:
     """Per-conversation boundary summary of ``df`` (one increment).
 
@@ -85,11 +90,14 @@ def boundary_state(
     pass, so "last row" means exactly what the full run's lag would
     see), then window aggregates — last row's idx and mono values over
     the full frame, the boundary key's group count, and its first-seen
-    tie string. Output is one row per conversation.
+    tie string. Output is one row per conversation — or, with
+    ``segment`` (a column of ``df``), one row per (conversation,
+    segment): the skew path's per-range-partition summary.
     """
     from ocsf_validator_spark.violations import _tie_display
 
     part, idx = keys[0], keys[1]
+    wp = [part] if segment is None else [part, segment]
     # Alternation needs the conversation's last value carried exactly
     # like Monotonic does (both are lag checks) — one carry column per
     # distinct column even when both kinds name it
@@ -102,7 +110,7 @@ def boundary_state(
     full_cols = list(
         dict.fromkeys([*mono_cols, *[c.column for c in prec_cs]])
     )
-    proj = [F.col(part), F.col(idx)]
+    proj = [F.col(c) for c in (*wp, idx)]
     for t in ties:
         if t in (part, idx):
             continue
@@ -113,13 +121,13 @@ def boundary_state(
     proj += [F.col(m) for m in full_cols if m not in (part, idx, *ties)]
     pre = df.select(*proj)
     tie_order = [F.col(t).asc_nulls_last() for t in ties]
-    w = Window.partitionBy(part).orderBy(F.col(idx).asc(), *tie_order)
+    w = Window.partitionBy(*wp).orderBy(F.col(idx).asc(), *tie_order)
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w2o = Window.partitionBy(part, idx).orderBy(*tie_order)
-    w2f = Window.partitionBy(part, idx)  # no order -> whole-group frame
+    w2o = Window.partitionBy(*wp, idx).orderBy(*tie_order)
+    w2f = Window.partitionBy(*wp, idx)  # no order -> whole-group frame
     tie_str = F.concat_ws("|", *[F.col(t).cast("string") for t in ties])
     staged = pre.select(
-        part,
+        *wp,
         idx,
         F.last(F.col(idx)).over(wf).alias("_last_idx"),
         *[F.last(F.col(m)).over(wf).alias(carry_mono_col(m)) for m in mono_cols],
@@ -139,7 +147,7 @@ def boundary_state(
     # keep only the boundary key's rows (identical summary values on
     # each), then collapse to one row per conversation
     at_tail = staged.filter(F.col(idx).eqNullSafe(F.col("_last_idx")))
-    return at_tail.groupBy(part).agg(
+    return at_tail.groupBy(*wp).agg(
         F.min("_last_idx").alias(CARRY_PREV_IDX),
         *[F.min(carry_mono_col(m)).alias(carry_mono_col(m)) for m in mono_cols],
         *[F.min(carry_seen_col(c)).alias(carry_seen_col(c)) for c in prec_cs],
@@ -175,11 +183,11 @@ def attach_carriers(
       group so the duplicate reason prints the TRUE first occurrence
     - _rv = NULL -> carriers never fire row-level legs
 
-    Only conversations PRESENT in the increment get a carrier (semi
-    join) — at scale the state table is bucketed by hash(conv_id) next
-    to the transcripts, so this probe is co-partitioned. Carrier rows
-    are filtered out after the window columns are computed; they emit
-    nothing themselves."""
+    Carrier rows are filtered out after the window columns are
+    computed; they emit nothing themselves, so a carrier for a
+    conversation absent from ``pre`` is harmless (the incremental
+    caller semi-joins the state to the increment's conversations
+    first, see violations.fused_group_violations)."""
     part, idx = keys[0], keys[1]
     mono_cols = list(
         dict.fromkeys(
@@ -187,12 +195,13 @@ def attach_carriers(
         )
     )
     prec_cs = [c for c in cs if isinstance(c, Precedence)]
-    state = state.join(pre.select(part).distinct(), part, "semi")
     sel = []
     for c in pre.columns:
         dt = pre.schema[c].dataType
-        if c == part:
-            sel.append(F.col(part))
+        if c == part or c in state.columns:
+            # the key, and the skew path's segment id (the window
+            # partition the carrier belongs to)
+            sel.append(F.col(c))
         elif c == idx:
             sel.append(F.col(CARRY_PREV_IDX).cast(dt).alias(idx))
         elif c in mono_cols:

@@ -306,7 +306,7 @@ def run_validation(
         if skewed:
             # partition the ordered path by DATA SIZE (~250k rows/task),
             # rounded UP to a multiple of the available slots so the
-            # Arrow stages run full waves (13 partitions on 8 cores is
+            # staged-sort stages run full waves (13 partitions on 8 cores is
             # a 1.6-wave schedule with a 38%-idle tail)
             n_big = sum(n for _, n in skewed_counts)
             p = max(8, -(-n_big // 250_000))

@@ -47,6 +47,11 @@ def get_spark(
         # time (driver-side tooling only; results unchanged)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # generated-class cache (default 100 entries): one validation
+        # pass with a routed skew leg plans ~160 distinct generated
+        # classes, and an LRU smaller than that working set recompiles
+        # (Janino + C2 JIT) every one of them on every pass
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -60,6 +60,7 @@ from ocsf_validator_spark.spec import (
 )
 
 DEFAULT_KEYS = ("conv_id", "turn_idx")
+_ENTRY_T = "struct<constraint_id:string,reason:string,severity:string>"
 
 # Duplicate-key reasons display the first-seen peer's tie values (the
 # reference's collision map names the kept peer, validators.py:236-262).
@@ -460,7 +461,7 @@ def fused_group_violations(
     shuffle only for violating rows — and string tie columns are capped
     at TIE_DISPLAY_LEN, so full `text` payloads never cross the
     exchange (ordered.py's skew path applies the same discipline for
-    the same reason, ordered.py:147-152).
+    the same reason: it stages this same projection).
 
     ``carry`` (incremental runs): the convstate boundary-state table —
     one carrier row per carried conversation is unioned into the
@@ -471,25 +472,35 @@ def fused_group_violations(
     BELOW the carried boundary is reported conservatively as
     ``out-of-order`` under the ordering constraint (boundary-only state
     cannot rank it — see convstate's module contract)."""
-    part, idx = keys[0], keys[1]
-    entry_t = "struct<constraint_id:string,reason:string,severity:string>"
-    mono_cols = [c.column for c in cs if isinstance(c, Monotonic)]
-    alt_cols = [c.column for c in cs if isinstance(c, Alternation)]
-    # columns whose PREVIOUS value the pass lags over (Monotonic's
-    # comparison, Alternation's repeat check) — one lag per distinct
-    # column even when both kinds name it
-    lag_cols = list(dict.fromkeys([*mono_cols, *alt_cols]))
-    # Precedence/OpeningRole/Alternation columns need exact values
-    # (isin/equality semantics — a capped prefix would change them),
-    # same as Monotonic
-    seq_cols = [
-        c.column
-        for c in cs
-        if isinstance(c, (Precedence, OpeningRole, Alternation))
-    ]
-    full_cols = list(dict.fromkeys([*mono_cols, *seq_cols]))
-    # ---- map-side stage: keys + bounded ties + mono columns + the row
-    # family's violation array, all computed BEFORE the exchange --------
+    pre = window_projection(df, cs, ties, keys, row_cs)
+    if carry is not None:
+        # only conversations PRESENT in the increment get a carrier — at
+        # scale the state table is bucketed by hash(conv_id) next to the
+        # transcripts, so this probe is co-partitioned
+        carry = carry.join(pre.select(keys[0]).distinct(), keys[0], "semi")
+    return window_violations(pre, cs, ties, keys, carry)
+
+
+def window_projection(
+    df: DataFrame,
+    cs: list,
+    ties: list[str],
+    keys: Sequence[str] = DEFAULT_KEYS,
+    row_cs: Sequence = (),
+) -> DataFrame:
+    """The fused pass's map-side stage: keys + bounded ties + the
+    lag/sequence columns, plus (with ``row_cs``) the row family's
+    violation array ``_rv`` — everything computed BEFORE the exchange."""
+    # Monotonic and Precedence/OpeningRole/Alternation columns need
+    # exact values (order/isin/equality semantics — a capped prefix
+    # would change them)
+    full_cols = list(
+        dict.fromkeys(
+            c.column
+            for c in cs
+            if isinstance(c, (Monotonic, Precedence, OpeningRole, Alternation))
+        )
+    )
     pre_cols = [F.col(k) for k in keys]
     for t in ties:
         if t in keys:
@@ -511,23 +522,47 @@ def fused_group_violations(
         # exchange and sort instead of an empty-array header, and never
         # allocates the struct array at all (see violation_entries_guarded)
         pre_cols.append(
-            violation_entries_guarded(row_cs, cast_to=entry_t).alias("_rv")
+            violation_entries_guarded(row_cs, cast_to=_ENTRY_T).alias("_rv")
         )
-    pre = df.select(*pre_cols)
+    return df.select(*pre_cols)
+
+
+def window_violations(
+    pre: DataFrame,
+    cs: list,
+    ties: list[str],
+    keys: Sequence[str] = DEFAULT_KEYS,
+    carry: DataFrame | None = None,
+    segment: str | None = None,
+) -> DataFrame:
+    """The fused pass's reduce side over a ``window_projection`` frame
+    (see fused_group_violations). ``segment`` names an extra window
+    partition column of ``pre``: the skew path (ordered.py) passes its
+    range-partition id, so every window runs per (conversation,
+    segment) and ``carry`` holds one carrier per continued segment."""
+    part, idx = keys[0], keys[1]
+    # columns whose PREVIOUS value the pass lags over (Monotonic's
+    # comparison, Alternation's repeat check) — one lag per distinct
+    # column even when both kinds name it
+    lag_cols = list(
+        dict.fromkeys(
+            c.column for c in cs if isinstance(c, (Monotonic, Alternation))
+        )
+    )
+    wp = [part] if segment is None else [part, segment]
     carried = carry is not None
     if carried:
         from ocsf_validator_spark.convstate import attach_carriers
 
         pre = attach_carriers(pre, carry, cs, ties, keys)
-    # ---- reduce-side windows, over the bounded columns only ------------
     tie_order = [F.col(t).asc_nulls_last() for t in ties]
     if carried:
         # the carrier sorts FIRST within its (conv, idx) group, so the
         # first in-order real row's lag is the carried boundary and a
         # boundary-key re-append ranks after the carried occurrences
         tie_order = [F.col("_cr").desc(), *tie_order]
-    w = Window.partitionBy(part).orderBy(F.col(idx).asc(), *tie_order)
-    w2 = Window.partitionBy(part, idx).orderBy(*tie_order)
+    w = Window.partitionBy(*wp).orderBy(F.col(idx).asc(), *tie_order)
+    w2 = Window.partitionBy(*wp, idx).orderBy(*tie_order)
     prev_idx = F.lag(F.col(idx)).over(w)
     cols: dict = {"_prev_idx": prev_idx}
     for m in lag_cols:
@@ -560,7 +595,7 @@ def fused_group_violations(
         cols["_rn1"] = F.row_number().over(w)
         if carried:
             cols["_c_has"] = F.max(F.col("_cr").cast("int")).over(
-                Window.partitionBy(part)
+                Window.partitionBy(*wp)
             )
     if carried:
         # the carried boundary idx, visible on every real row of the
@@ -568,7 +603,7 @@ def fused_group_violations(
         # so no extra exchange)
         cols["_c_bound"] = F.max(
             F.when(F.col("_cr"), F.col(idx))
-        ).over(Window.partitionBy(part))
+        ).over(Window.partitionBy(*wp))
     has_unique = any(isinstance(c, Unique) for c in cs)
     if has_unique:
         first_seen_str = F.concat_ws(
@@ -613,7 +648,7 @@ def fused_group_violations(
             # ties (full-frame max over the group: non-NULL only on
             # carried groups, so uncarried groups keep base_first)
             cols["_first"] = F.coalesce(
-                F.max(F.col("_cr_first")).over(Window.partitionBy(part, idx)),
+                F.max(F.col("_cr_first")).over(Window.partitionBy(*wp, idx)),
                 base_first,
             )
         else:
@@ -799,13 +834,14 @@ def fused_group_violations(
         group_arr = F.when(
             gguard,
             F.array_compact(
-                F.array(*[F.when(c_, s_).cast(entry_t) for c_, s_ in legs])
+                F.array(*[F.when(c_, s_).cast(_ENTRY_T) for c_, s_ in legs])
             ),
         )
     else:
-        group_arr = F.lit(None).cast(f"array<{entry_t}>")
+        group_arr = F.lit(None).cast(f"array<{_ENTRY_T}>")
     staged = staged.select(*staged.columns, group_arr.alias("_gv"))
-    if row_cs and legs:
+    row_legs = "_rv" in pre.columns
+    if row_legs and legs:
         # both sides are NULL-for-clean now; concat(NULL, x) is NULL,
         # so branch instead of coalescing into per-row empty arrays
         entries = (
@@ -813,7 +849,7 @@ def fused_group_violations(
             .when(F.col("_gv").isNull(), F.col("_rv"))
             .otherwise(F.concat(F.col("_rv"), F.col("_gv")))
         )
-    elif row_cs:
+    elif row_legs:
         entries = F.col("_rv")
     else:
         entries = F.col("_gv")
@@ -1280,7 +1316,9 @@ def dataset_findings(
     cov = [
         c
         for c in suite.dataset_level()
-        if isinstance(c, EnumCoverage) and c.column in df.columns
+        # an empty `values` declares nothing to observe: no findings,
+        # and no coverage leg (an agg with no expressions is invalid)
+        if isinstance(c, EnumCoverage) and c.values and c.column in df.columns
     ]
     cov_leg = None
     if cov and include_coverage:
@@ -1693,8 +1731,9 @@ def all_violations(
     than the biggest NORMAL conversation — no straggler task.
 
     ``concurrent_skew``: overlap the two legs. The ordered path is
-    eager (staging sample, boundary-summary collect, checkpoint) and
-    its driver barriers idle the cluster between jobs; the fused leg is
+    eager (staging sample, staged sort, segment summary and carry
+    stages, checkpoint) and its job barriers idle the cluster between
+    jobs; the fused leg is
     one long scan. Running the ordered leg in a worker thread while
     this thread materializes the fused leg (eager localCheckpoint —
     violations are defect-proportional, so the pin is small) keeps the

@@ -632,3 +632,25 @@ def test_drift_gate_from_baseline_file_end_to_end(spark, tmp_path):
     shifted = ref.withColumn("text", F.concat(F.col("text"), F.lit("y" * 50)))
     rows = dataset_findings(shifted, suite).collect()
     assert len(rows) == 1 and "= 5.000000 above threshold 1.5" in rows[0].reason
+
+
+def test_enum_coverage_empty_values_is_skipped(spark):
+    """An EnumCoverage declaring no values has nothing to observe: the
+    lazy coverage leg must skip it (an agg with no expressions is
+    invalid) while a sibling coverage constraint still reports."""
+    from ocsf_validator_spark.spec import EnumCoverage
+
+    df = _df(spark, [("c1", 0, "user", "hi"), ("c1", 1, "assistant", "yo")])
+    empty_only = ConstraintSet(
+        name="cov0", constraints=[EnumCoverage(column="role", values=())]
+    )
+    assert dataset_findings(df, empty_only).count() == 0
+    mixed = ConstraintSet(
+        name="cov1",
+        constraints=[
+            EnumCoverage(column="role", values=()),
+            EnumCoverage(column="text", values=("hi", "bye")),
+        ],
+    )
+    got = [(r.constraint_id, r.reason) for r in dataset_findings(df, mixed).collect()]
+    assert got == [("coverage.text", "enum value 'bye' never observed in text")]

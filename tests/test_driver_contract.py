@@ -44,29 +44,16 @@ def test_entry_runs(spark):
     ]
 
 
-def test_verdict_diff_fused_stats_match_naive_scans(spark):
-    """verdict_diff's single fused stats scan must reproduce EXACTLY
-    what the two runs' separate probe scans used to compute: the
-    observed-bucket list and the enum-coverage observation set, per
-    half (even-conversation run vs full run). Pinned against the naive
-    per-half formulations so the fusion can never drift from the
-    per-run semantics it replaced."""
+def _assert_fused_stats_match_naive_scans(spark, cov):
     from pyspark.sql import functions as F
 
     from ocsf_validator_spark.stats import md5_bucket_col
 
-    ev = e._t(spark, SF, "events")
-    suite = e._events_suite()
-    cov = [c for c in suite.constraints if type(c).__name__ == "EnumCoverage"]
-    assert cov, "events suite is expected to declare EnumCoverage(role)"
-    cov_vals = [v for c in cov for v in c.values]
+    t = e._transcripts(spark, SF)
+    obs_buckets, obs_enums = e._vd_observed_stats(t, cov)
 
-    obs_buckets, obs_enums = e._vd_observed_stats(ev, cov_vals)
-
-    base = ev.select(F.col("user_id").cast("string").alias("conv_id"),
-                     F.col("event_type").alias("role"))
     pred = "CAST(conv_id AS BIGINT) % 2 = 0"
-    for half, frame in ((True, base.filter(pred)), (False, base)):
+    for half, frame in ((True, t.filter(pred)), (False, t)):
         naive_buckets = sorted(
             int(r[0])
             for r in frame.select(md5_bucket_col("conv_id", 8).alias("b"))
@@ -74,13 +61,41 @@ def test_verdict_diff_fused_stats_match_naive_scans(spark):
             .collect()
         )
         assert obs_buckets[half] == naive_buckets, half
-        naive_obs = {
-            x
-            for r in frame.agg(
-                F.collect_set(
-                    F.when(F.col("role").isin(*cov_vals), F.col("role"))
-                ).alias("o")
-            ).collect()
-            for x in (r["o"] or [])
-        }
-        assert obs_enums[half]["role"] == naive_obs, half
+        for c in cov:
+            naive_obs = {
+                x
+                for r in frame.agg(
+                    F.collect_set(
+                        F.when(F.col(c.column).isin(*c.values), F.col(c.column))
+                    ).alias("o")
+                ).collect()
+                for x in (r["o"] or [])
+            }
+            assert obs_enums[half][c.column] == naive_obs, (half, c.column)
+    return obs_enums
+
+
+def test_verdict_diff_fused_stats_match_naive_scans(spark):
+    """verdict_diff's single fused stats scan must reproduce EXACTLY
+    what the two runs' separate probe scans used to compute: the
+    observed-bucket list and the enum-coverage observation set, per
+    half (even-conversation run vs full run). Pinned against the naive
+    per-half formulations so the fusion can never drift from the
+    per-run semantics it replaced."""
+    suite = e._events_suite()
+    cov = [c for c in suite.constraints if type(c).__name__ == "EnumCoverage"]
+    assert cov, "events suite is expected to declare EnumCoverage(role)"
+    _assert_fused_stats_match_naive_scans(spark, cov)
+
+
+def test_verdict_diff_fused_stats_key_every_coverage_column(spark):
+    """Two EnumCoverage constraints on different columns: each column's
+    observed set is keyed under its own name, not folded into `role`."""
+    from ocsf_validator_spark.spec import EnumCoverage
+
+    cov = [
+        EnumCoverage(column="role", values=("click", "view", "refund")),
+        EnumCoverage(column="text", values=('{"k": 26}', "never-seen")),
+    ]
+    obs = _assert_fused_stats_match_naive_scans(spark, cov)
+    assert obs[False] == {"role": {"click", "view"}, "text": {'{"k": 26}'}}
