@@ -14,14 +14,16 @@ Three evaluation strategies by constraint class:
    explode emits only violating (row, constraint) pairs, so output is
    proportional to violations, not rows × constraints.
 
-2. GROUP-LEVEL (uniqueness / ordering / monotonicity) — when every
-   group constraint shares the conversation window (the transcript
-   suite's shape), ALL of them evaluate in ONE fused pass: a single
-   shuffle by conv_id + one sort by (turn_idx, tie-break), every check
-   expressed as lag/fill-forward columns over that one Window, then the
-   same array_compact+explode emission as the row leg. One shuffle for
-   the whole group family instead of one per constraint (the per-
-   constraint fallbacks below remain for heterogeneous suites).
+2. GROUP-LEVEL (uniqueness / ordering / monotonicity / sequence) —
+   every window check has one definition, the fused window pass: per
+   (partition, order) window, ONE shuffle by the partition column + one
+   sort by (order, tie-break), every check expressed as lag/running
+   columns over that one Window, then the same array_compact+explode
+   emission as the row leg. The transcript suite's group family is one
+   window, the conversation window, so one shuffle serves all of it.
+   _group_plan assigns each group constraint to its window's pass; a
+   Unique whose keys name no window (or whose tie order differs from
+   the pass's) runs as a standalone unique_violations.
 
 3. DATASET-LEVEL (schema audit, enum coverage) — driver schema diff and
    tiny anti-joins; emitted with NULL row keys.
@@ -139,14 +141,17 @@ def _referenced_columns(c) -> list[str]:
         return [*c.determinants, c.column]
     if isinstance(c, GroupMetricBound):
         return [*c.by, c.column]
-    if isinstance(c, ClosingRole):
-        return [c.partition_by, c.order_by, c.column]
-    if isinstance(c, Monotonic):
-        return [c.partition_by, c.order_by, c.column]
     if isinstance(c, TurnOrdering):
         return [c.partition_by, c.order_by]
+    if isinstance(c, (ClosingRole, Monotonic, Precedence, OpeningRole, Alternation)):
+        return [c.partition_by, c.order_by, c.column]
     cols = getattr(c, "columns", None)  # PandasCheck
     return list(cols) if cols else [c.column]
+
+
+def _row_cs(df: DataFrame, suite: ConstraintSet) -> list:
+    """The row-level constraints that can be evaluated on ``df``."""
+    return [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
 
 
 def row_violations(
@@ -157,7 +162,7 @@ def row_violations(
     Constraints whose column doesn't resolve (top-level OR struct path)
     are skipped here but REPORTED by dataset_findings as an
     unresolvable-column finding — never a silent skip."""
-    cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
+    cs = _row_cs(df, suite)
     if not cs or not _present(df, keys):
         return _empty(df, keys)
     entries = violation_entries_guarded(cs)
@@ -230,197 +235,64 @@ def unique_violations(
     return out
 
 
-def ordering_violations(
-    df: DataFrame, c: TurnOrdering, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Dense turn numbering per conversation (north-star O3): within
-    Window.partitionBy(conv_id).orderBy(turn_idx), turn_idx must start
-    at 0 and increase by exactly 1. Duplicates and gaps both emit at the
-    offending row."""
-    part, idx = c.partition_by, c.order_by
-    w = Window.partitionBy(part).orderBy(F.col(idx).asc())
-    prev = F.lag(F.col(idx)).over(w)
-    expected = F.coalesce(prev + F.lit(1), F.lit(0))
-    staged = df.select(*keys, F.col(idx).alias("_idx"), prev.alias("_prev"), expected.alias("_exp"))
-    is_dup = F.col("_prev").isNotNull() & (F.col("_idx") == F.col("_prev"))
-    is_gap = F.col("_idx") > F.col("_exp")
-    return (
-        staged.filter(is_dup | is_gap)
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.when(
-                F.col("_idx") == F.col("_prev"),
-                F.concat(
-                    F.lit(f"duplicate {idx} "), F.col("_idx").cast("string")
-                ),
-            )
-            .otherwise(
-                F.concat(
-                    F.lit(f"{idx} gap: expected "),
-                    F.col("_exp").cast("string"),
-                    F.lit(" got "),
-                    F.col("_idx").cast("string"),
-                )
-            )
-            .alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
+def _window_of(c) -> tuple:
+    """(partition, order) of a window-evaluated group constraint; a
+    Unique's candidate window is its key tuple."""
+    if isinstance(c, Unique):
+        return tuple(c.keys)
+    return (c.partition_by, c.order_by)
 
 
-def monotonic_violations(
-    df: DataFrame, c: Monotonic, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Per-conversation monotonicity of ``column`` under stable turn
-    ordering (Window.partitionBy(conv_id).orderBy(turn_idx))."""
-    w = Window.partitionBy(c.partition_by).orderBy(F.col(c.order_by).asc())
-    prev = F.lag(F.col(c.column)).over(w)
-    staged = df.select(*keys, F.col(c.column).alias("_cur"), prev.alias("_prev"))
-    bad = (
-        (F.col("_cur") < F.col("_prev"))
-        if not c.strict
-        else (F.col("_cur") <= F.col("_prev"))
-    )
-    return (
-        staged.filter(F.col("_prev").isNotNull() & bad)
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.concat(
-                F.lit(f"{c.column} not monotonic: "),
-                F.col("_cur").cast("string"),
-                F.lit(" after "),
-                F.col("_prev").cast("string"),
-            ).alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
+def _group_plan(suite: ConstraintSet, df: DataFrame, keys: Sequence[str]):
+    """Assign every group constraint to one of two engine shapes.
 
-
-def precedence_violations(
-    df: DataFrame, c: Precedence, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Standalone Precedence leg (unfused fallback): running prereq
-    count over the conversation window's strictly-preceding frame, one
-    exchange on partition_by. Reason string identical to the fused and
-    skew paths (parity-pinned)."""
-    w = (
-        Window.partitionBy(c.partition_by)
-        .orderBy(F.col(c.order_by).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prior = F.sum(
-        F.when(F.col(c.column).isin(*c.prereq), F.lit(1)).otherwise(F.lit(0))
-    ).over(w)
-    staged = df.select(
-        *keys, F.col(c.column).alias("_cur"), prior.alias("_prior")
-    )
-    return (
-        staged.filter(
-            (F.col("_cur") == F.lit(c.trigger))
-            & (F.coalesce(F.col("_prior"), F.lit(0)) == 0)
-        )
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.lit(
-                f"{c.column} '{c.trigger}' with no prior "
-                f"{'|'.join(c.prereq)}"
-            ).alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
-
-
-def opening_violations(
-    df: DataFrame, c: OpeningRole, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Standalone OpeningRole leg (unfused fallback): the first row of
-    each conversation under stable turn ordering must carry an allowed
-    value; NULL openers violate."""
-    w = Window.partitionBy(c.partition_by).orderBy(F.col(c.order_by).asc())
-    staged = df.select(
-        *keys,
-        F.col(c.column).alias("_cur"),
-        F.row_number().over(w).alias("_rn1"),
-    )
-    return (
-        staged.filter(
-            (F.col("_rn1") == 1)
-            & (F.col("_cur").isNull() | ~F.col("_cur").isin(*c.allowed))
-        )
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.concat(
-                F.lit("conversation opens with "),
-                F.coalesce(F.col("_cur").cast("string"), F.lit("NULL")),
-            ).alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
-
-
-def alternation_violations(
-    df: DataFrame, c: Alternation, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Standalone Alternation leg (unfused fallback): lag over the
-    conversation window, flag rows equal to their predecessor (scoped
-    to ``c.scope`` when set). Reason string identical to the fused
-    path (parity-pinned)."""
-    w = Window.partitionBy(c.partition_by).orderBy(F.col(c.order_by).asc())
-    staged = df.select(
-        *keys,
-        F.col(c.column).alias("_cur"),
-        F.lag(F.col(c.column)).over(w).alias("_prev"),
-    )
-    bad = F.col("_prev").isNotNull() & (F.col("_cur") == F.col("_prev"))
-    if c.scope:
-        bad = bad & F.col("_cur").isin(*c.scope)
-    return staged.filter(bad).select(
-        F.lit(c.constraint_id).alias("constraint_id"),
-        *keys,
-        F.concat(
-            F.lit(f"consecutive {c.column} '"),
-            F.col("_cur").cast("string"),
-            F.lit("'"),
-        ).alias("reason"),
-        F.lit(c.severity.name).alias("severity"),
-    )
+    Returns ``(passes, standalone)``: ``passes`` maps a window
+    (partition, order) to ``(constraints, tie_break_cols)`` for one
+    fused window pass, in suite order; ``standalone`` lists the Unique
+    constraints that run through unique_violations. A window exists for
+    each (partition, order) some TurnOrdering / Monotonic / Precedence /
+    OpeningRole / Alternation names, and for the conversation window
+    (keys[0], keys[1]). A Unique joins the window equal to its keys
+    unless an earlier Unique of that pass breaks ties differently
+    (one window order serves one first_seen_order). Constraints whose
+    columns are absent are left out: dataset_findings reports them."""
+    cs = [c for c in suite.group_level() if _present(df, _referenced_columns(c))]
+    windows = {(keys[0], keys[1])} | {
+        _window_of(c) for c in cs if not isinstance(c, Unique)
+    }
+    passes: dict = {}  # ties stay None until the pass's first Unique
+    standalone = []
+    for c in cs:
+        w = _window_of(c)
+        members, ties = passes.get(w, ([], None))
+        if isinstance(c, Unique):
+            if w not in windows or ties not in (None, list(c.first_seen_order)):
+                standalone.append(c)
+                continue
+            ties = list(c.first_seen_order)
+        passes[w] = ([*members, c], ties)
+    return {w: (m, t or []) for w, (m, t) in passes.items()}, standalone
 
 
 def _fusable(suite: ConstraintSet, df: DataFrame, keys: Sequence[str]):
-    """Group constraints that all live on the same conversation window
-    (partition = keys[0], order = keys[1]; Unique over exactly those two
-    keys). Returns (constraints, tie_break_cols) or None."""
-    part, idx = keys[0], keys[1]
-    cs, ties = [], []
-    for c in suite.group_level():
-        if isinstance(c, Unique):
-            if tuple(c.keys) != (part, idx) or not _present(df, c.keys):
-                return None
-            ties = list(c.first_seen_order)
-            if not _present(df, ties):
-                return None
-        elif isinstance(
-            c, (TurnOrdering, Monotonic, Precedence, OpeningRole, Alternation)
-        ):
-            if c.partition_by != part or c.order_by != idx:
-                return None
-            need = (
-                [c.column]
-                if isinstance(
-                    c, (Monotonic, Precedence, OpeningRole, Alternation)
-                )
-                else []
-            )
-            if not _present(df, [part, idx, *need]):
-                return None
-        else:
-            return None
-        cs.append(c)
-    return (cs, ties) if cs else None
+    """The conversation window's share of the group plan: (constraints,
+    tie_break_cols) for window (keys[0], keys[1]), or None when no
+    group constraint lives there. Only this pass takes the row family,
+    the incremental carry and the skew split."""
+    return _group_plan(suite, df, keys)[0].get((keys[0], keys[1]))
+
+
+def _group_legs(df: DataFrame, suite: ConstraintSet, keys: Sequence[str]):
+    """``(conv, legs)``: the conversation window's share (as _fusable
+    returns it) and every other group leg — one fused pass per other
+    window, one unique_violations per standalone Unique, rows keyed by
+    ``keys``."""
+    passes, standalone = _group_plan(suite, df, keys)
+    conv = passes.pop((keys[0], keys[1]), None)
+    return conv, [
+        *(fused_group_violations(df, cs, ties, keys) for cs, ties in passes.values()),
+        *(unique_violations(df, c, keys) for c in standalone),
+    ]
 
 
 def fused_group_violations(
@@ -501,9 +373,12 @@ def window_projection(
             if isinstance(c, (Monotonic, Precedence, OpeningRole, Alternation))
         )
     )
-    pre_cols = [F.col(k) for k in keys]
+    # output keys + the pass's window columns (the same two columns on
+    # the conversation window)
+    base = list(dict.fromkeys([*keys, *_window_of(cs[0])]))
+    pre_cols = [F.col(k) for k in base]
     for t in ties:
-        if t in keys:
+        if t in base:
             continue
         if t in full_cols:
             # a Monotonic column doubling as a tie must keep its full
@@ -514,7 +389,7 @@ def window_projection(
                 _tie_display(F.col(t), df.schema[t].dataType).alias(t)
             )
     pre_cols += [
-        F.col(m) for m in full_cols if m not in keys and m not in ties
+        F.col(m) for m in full_cols if m not in base and m not in ties
     ]
     if row_cs:
         # defect-proportional: NULL (not an empty array) for clean rows,
@@ -539,8 +414,10 @@ def window_violations(
     (see fused_group_violations). ``segment`` names an extra window
     partition column of ``pre``: the skew path (ordered.py) passes its
     range-partition id, so every window runs per (conversation,
-    segment) and ``carry`` holds one carrier per continued segment."""
-    part, idx = keys[0], keys[1]
+    segment) and ``carry`` holds one carrier per continued segment.
+    The window is the constraints' own (partition, order); output rows
+    are keyed by ``keys``."""
+    part, idx = _window_of(cs[0])
     # columns whose PREVIOUS value the pass lags over (Monotonic's
     # comparison, Alternation's repeat check) — one lag per distinct
     # column even when both kinds name it
@@ -670,7 +547,7 @@ def window_violations(
     )
     occ = F.col("_occ") if has_unique else F.lit(1)
     legs = []
-    key_repr = F.concat_ws(",", *[F.col(k).cast("string") for k in keys])
+    key_repr = F.concat_ws(",", *[F.col(k).cast("string") for k in (part, idx)])
     for c in cs:
         if isinstance(c, Unique):
             legs.append(
@@ -1216,33 +1093,16 @@ def _fd_leg(
 def group_violations(
     df: DataFrame, suite: ConstraintSet, keys: Sequence[str] = DEFAULT_KEYS
 ) -> DataFrame:
+    """Every group constraint: the conversation window pass, then the
+    other window passes and the standalone uniques (see _group_plan)."""
     out = _empty(df, keys)
     if not _present(df, keys):
         return out
-    fused = _fusable(suite, df, keys)
-    if fused:
-        return out.unionByName(fused_group_violations(df, *fused, keys))
-    for c in suite.group_level():
-        if isinstance(c, Unique) and _present(df, c.keys):
-            out = out.unionByName(unique_violations(df, c, keys))
-        elif isinstance(c, TurnOrdering) and _present(df, [c.partition_by, c.order_by]):
-            out = out.unionByName(ordering_violations(df, c, keys))
-        elif isinstance(c, Monotonic) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(monotonic_violations(df, c, keys))
-        elif isinstance(c, Precedence) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(precedence_violations(df, c, keys))
-        elif isinstance(c, OpeningRole) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(opening_violations(df, c, keys))
-        elif isinstance(c, Alternation) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(alternation_violations(df, c, keys))
+    conv, legs = _group_legs(df, suite, keys)
+    if conv:
+        legs.insert(0, fused_group_violations(df, *conv, keys))
+    for leg in legs:
+        out = out.unionByName(leg)
     return out
 
 
@@ -1711,122 +1571,87 @@ def all_violations(
     observed_enums: dict | None = None,
     skewed_convs: Sequence[str] | None = None,
     ordered_partitions: int | None = None,
-    concurrent_skew: bool = True,
     carry: DataFrame | None = None,
     observed_metrics: dict | None = None,
     fd_carry: "dict[str, DataFrame] | None" = None,
 ) -> DataFrame:
-    """Full suite in as few scans as possible. When the group family is
-    window-fusable (the transcript shape), the row family rides the same
-    shuffle: ONE scan of the input for every per-row and per-conversation
-    constraint, plus the tiny bounded coverage agg (itself skippable via
-    ``observed_enums``). Heterogeneous suites fall back to one fused row
-    scan + per-constraint group legs.
+    """Full suite in as few scans as possible. The row family rides the
+    conversation window pass (window (keys[0], keys[1]), see
+    _group_plan): ONE scan of the input for every per-row and
+    per-conversation constraint, plus the tiny bounded coverage agg
+    (itself skippable via ``observed_enums``). A suite with no
+    conversation-window constraint scans its row family in one
+    projection instead. Group constraints on other windows run one
+    fused pass per window, a Unique no pass can take runs through
+    unique_violations; those legs, the residual, FD and dataset legs
+    are unioned onto the conversation pass.
 
     ``skewed_convs`` (from detect_skewed_convs) routes pathologically
-    large conversations AROUND the window pass: their group checks run
-    on the skew-immune range-partitioned path (ordered.py) and their row
-    checks on a map-only projection, while everything else keeps the
-    single-scan plan. The window pass then never sees a partition larger
-    than the biggest NORMAL conversation — no straggler task.
-
-    ``concurrent_skew``: overlap the two legs. The ordered path is
-    eager (staging sample, staged sort, segment summary and carry
-    stages, checkpoint) and its job barriers idle the cluster between
-    jobs; the fused leg is
-    one long scan. Running the ordered leg in a worker thread while
-    this thread materializes the fused leg (eager localCheckpoint —
-    violations are defect-proportional, so the pin is small) keeps the
-    executors busy across both legs' barriers, the way two scheduler
-    pools would on a real cluster. The cost model is the reason this
-    matters for SCALING, not just wall: serial driver gaps are a fixed
-    absolute time, so at 4N cores they waste 4x the compute of N cores
-    — overlap removes them from the critical path at every level.
-    Result identity is pinned by test (the union is commutative and
-    both legs are unchanged). When False, both legs stay lazy/serial
-    in one plan (the round-3 behavior).
+    large conversations AROUND the conversation window pass: their
+    conversation-window and row checks run on the skew-immune
+    range-partitioned path (ordered.py), while everything else keeps
+    the single-scan plan. The window pass then never sees a partition
+    larger than the biggest NORMAL conversation — no straggler task.
+    The two legs overlap: the ordered leg (eager, with job barriers
+    that would idle the cluster) runs in a worker thread while this
+    thread materializes the rest (eager localCheckpoint — violations
+    are defect-proportional, so the pin is small). Serial driver gaps
+    are a fixed absolute time, so at 4N cores they would waste 4x the
+    compute of N cores. Other windows and standalone uniques are not
+    skew-routed.
 
     ``carry`` (incremental runs): convstate boundary-state table,
-    seeded into the fused window pass (see fused_group_violations).
-    Carriers semi-join against the leg's own conv set, so on the skew
-    split each leg only ever sees its own conversations' carriers; the
-    range-partitioned ordered leg does not consume carry (a >=1M-row
-    conversation's boundary checks fall back to the documented
-    per-increment contract — its sheer size makes a silent straddle
-    vanishingly unlikely to matter before the nightly full run)."""
-    fused = _fusable(suite, df, keys) if _present(df, keys) else None
-    if fused and skewed_convs:
-        from ocsf_validator_spark.ordered import scalable_group_violations
-
-        part = keys[0]
-        big = df.filter(F.col(part).isin(*skewed_convs))
-        small = df.filter(
-            ~F.col(part).isin(*skewed_convs) | F.col(part).isNull()
-        )
-        row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
-        if concurrent_skew:
-            from concurrent.futures import ThreadPoolExecutor
-
-            main_lazy = fused_group_violations(
-                small, *fused, keys, row_cs=row_cs, carry=carry
-            )
-            if suite.residual_level():
-                main_lazy = main_lazy.unionByName(
-                    residual_violations(df, suite, keys)
-                )
-            if suite.key_level():
-                main_lazy = main_lazy.unionByName(
-                    fd_violations(df, suite, keys, carry=fd_carry)
-                )
-            main_lazy = main_lazy.unionByName(
-                dataset_findings(df, suite, keys, include_coverage, observed_enums, observed_metrics)
-            )
-            ex = ThreadPoolExecutor(max_workers=1)
-            try:
-                fut = ex.submit(
-                    scalable_group_violations,
-                    big,
-                    fused[0],
-                    fused[1],
-                    keys,
-                    num_partitions=ordered_partitions,
-                    row_cs=row_cs,
-                )
-                # runs the fused scan NOW, concurrent with the ordered
-                # leg's jobs; the pinned result is defect-proportional
-                main_eager = main_lazy.localCheckpoint(eager=True)
-                ordered = fut.result()
-            finally:
-                ex.shutdown(wait=True)
-            return main_eager.unionByName(ordered)
-        main = fused_group_violations(
-            small, *fused, keys, row_cs=row_cs, carry=carry
-        ).unionByName(
-            # the skewed subset's row legs ride the same staged sort as
-            # its group checks — one scan of the source for everything
-            scalable_group_violations(
-                big,
-                fused[0],
-                fused[1],
-                keys,
-                num_partitions=ordered_partitions,
-                row_cs=row_cs,
-            )
-        )
-    elif fused:
-        row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
-        main = fused_group_violations(df, *fused, keys, row_cs=row_cs, carry=carry)
-    else:
-        main = row_violations(df, suite, keys).unionByName(
-            group_violations(df, suite, keys)
-        )
+    seeded into the conversation window pass (see
+    fused_group_violations). Carriers semi-join against the leg's own
+    conv set, so on the skew split each leg only ever sees its own
+    conversations' carriers; the range-partitioned ordered leg does not
+    consume carry (a >=1M-row conversation's boundary checks fall back
+    to the documented per-increment contract — its sheer size makes a
+    silent straddle vanishingly unlikely to matter before the nightly
+    full run). Other windows are not carried."""
+    conv, rest = _group_legs(df, suite, keys) if _present(df, keys) else (None, [])
     if suite.residual_level():
-        main = main.unionByName(residual_violations(df, suite, keys))
+        rest.append(residual_violations(df, suite, keys))
     if suite.key_level():
-        main = main.unionByName(fd_violations(df, suite, keys, carry=fd_carry))
-    return main.unionByName(
+        rest.append(fd_violations(df, suite, keys, carry=fd_carry))
+    rest.append(
         dataset_findings(df, suite, keys, include_coverage, observed_enums, observed_metrics)
     )
+    routed = bool(conv and skewed_convs)
+    part = keys[0]
+    if conv:
+        small = (
+            df.filter(~F.col(part).isin(*skewed_convs) | F.col(part).isNull())
+            if routed
+            else df
+        )
+        main = fused_group_violations(
+            small, *conv, keys, row_cs=_row_cs(df, suite), carry=carry
+        )
+    else:
+        main = row_violations(df, suite, keys)
+    for leg in rest:
+        main = main.unionByName(leg)
+    if not routed:
+        return main
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ocsf_validator_spark.ordered import scalable_group_violations
+
+    big = df.filter(F.col(part).isin(*skewed_convs))
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        fut = ex.submit(
+            scalable_group_violations,
+            big,
+            *conv,
+            keys,
+            num_partitions=ordered_partitions,
+            row_cs=_row_cs(df, suite),
+        )
+        # runs the main scan NOW, concurrent with the ordered leg's
+        # jobs; the pinned result is defect-proportional
+        main = main.localCheckpoint(eager=True)
+        return main.unionByName(fut.result())
 
 
 def cap_violations(

@@ -69,13 +69,13 @@ INC2_OOO = [
 ]
 
 
-def _run_two_increments(spark, tmp_path, inc2_rows):
+def _run_two_increments(spark, tmp_path, inc2_rows, extra=()):
     root = str(tmp_path / "landing")
     manifest = str(tmp_path / "manifest")
     viol = str(tmp_path / "viol_inc")
     _df(spark, INC1).coalesce(1).write.mode("append").parquet(root)
     argv = ["--input", root, "--incremental", "--checkpoint", manifest,
-            "--buckets", "4", "--violations-out", viol]
+            "--buckets", "4", "--violations-out", viol, *extra]
     assert main(argv) in (0, 1)
     _df(spark, inc2_rows).coalesce(1).write.mode("append").parquet(root)
     assert main(argv) in (0, 1)
@@ -90,10 +90,10 @@ def _run_two_increments(spark, tmp_path, inc2_rows):
     }
 
 
-def _full_run(spark, tmp_path, root):
+def _full_run(spark, tmp_path, root, extra=()):
     viol = str(tmp_path / "viol_full")
     assert main(["--input", root, "--buckets", "4",
-                 "--violations-out", viol]) in (0, 1)
+                 "--violations-out", viol, *extra]) in (0, 1)
     rows = (
         spark.read.parquet(viol).filter("conv_id is not null").collect()
     )
@@ -123,6 +123,42 @@ def test_in_order_increments_match_fresh_full_run(spark, tmp_path):
     f3 = [r for (cid, conv, _, r, _) in inc_set
           if conv == "f" and "occurrence 3" in r]
     assert f3 and "f1 first" in f3[0]
+
+
+def test_heterogeneous_suite_carries_the_conversation_window(spark, tmp_path):
+    """A suite with group constraints off the conversation window (a
+    Monotonic ordered by ts, a Unique over (conv_id, text)) still writes
+    conversation state, and its conversation-window constraints match
+    the fresh full run across the increment boundary."""
+    import json as _json
+
+    from ocsf_validator_spark.spec import (
+        ConstraintSet,
+        Monotonic,
+        Unique,
+        suite_to_registry,
+        transcript_suite,
+    )
+
+    suite = ConstraintSet(
+        name="hetero",
+        constraints=[
+            *transcript_suite().constraints,
+            Monotonic(column="turn_idx", order_by="ts", id_override="monotonic.turn_by_ts"),
+            Unique(column="conv_text", keys=("conv_id", "text"), first_seen_order=("ts",)),
+        ],
+    )
+    sj = str(tmp_path / "hetero.json")
+    with open(sj, "w") as f:
+        _json.dump(suite_to_registry(suite), f)
+    extra = ("--suite-json", sj, "--suite-name", "hetero")
+    root, manifest, inc_set = _run_two_increments(spark, tmp_path, INC2, extra)
+    assert convstate.read_state(spark, manifest) is not None
+    full_set = _full_run(spark, tmp_path, root, extra)
+    conv_window = {"unique.conv_turn", "order.turn_idx", "monotonic.ts"}
+    inc_conv = {v for v in inc_set if v[0] in conv_window}
+    assert inc_conv == {v for v in full_set if v[0] in conv_window}
+    assert not [v for v in inc_conv if v[1] == "a"]
 
 
 def test_out_of_order_append_is_conservatively_reported(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Equivalence of the skew-resilient ordered-check path (ordered.py,
-range-partition + mapInPandas + boundary carry) with the window
+range partitions carried like increments) with the window
 formulation (violations.fused_group_violations) — row-for-row."""
 
 from __future__ import annotations
@@ -48,8 +48,7 @@ def test_scalable_matches_window(spark, partitions):
 def test_scalable_straddling_groups(spark):
     """A single giant duplicate group + one giant conversation forced
     across MANY partitions: occurrence numbers and first-seen must carry
-    over every boundary (and tiny Arrow batches exercise the
-    within-partition batch-state carry too)."""
+    over every boundary."""
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
     try:
         base = synth_transcripts(spark, n_turns=4000, seed=11)
@@ -97,9 +96,9 @@ def test_scalable_null_ties(spark):
 
 
 def test_scalable_null_ts_in_dup_group(spark):
-    """NULL ts inside duplicate groups (NaT tie values): the per-row
-    tie-string fallback must drop NaN (strftime of NaT), not crash the
-    mapInPandas job — exactly the dirty data NotNull(ts) exists to flag."""
+    """NULL ts inside duplicate groups: concat_ws skips the NULL tie
+    value in the first-seen string on both paths, including a carried
+    one — exactly the dirty data NotNull(ts) exists to flag."""
     df = _with_defects(spark, n=5000).withColumn(
         "ts",
         F.when(F.xxhash64("conv_id", "turn_idx", "text") % 5 == 0, None).otherwise(
@@ -144,9 +143,9 @@ def test_scalable_null_tie_straddles_boundary(spark):
 
 
 def test_scalable_date_columns(spark):
-    """DATE-typed tie + monotonic columns: _sql_str must render dates the
-    way CAST(d AS STRING) does (no time part), and the Phase B carry must
-    re-parse a boundary-crossing date from its JSON string form."""
+    """DATE-typed tie + monotonic columns: the first-seen string and the
+    carried monotonic value of a boundary-crossing date must match the
+    window formulation."""
     from ocsf_validator_spark.spec import Monotonic, TurnOrdering, Unique
 
     df = (
@@ -190,11 +189,10 @@ def test_scalable_row_legs_ride_staged(spark):
     assert _diff(got, want) == 0
 
 
-def test_all_violations_concurrent_skew_equivalence(spark):
-    """The overlapped formulation (ordered leg in a worker thread while
-    the fused leg checkpoints) must return exactly the serial union —
-    same rows, and already materialized (checkpointed) so downstream
-    consumers never re-run either leg."""
+def test_all_violations_skew_routed_equivalence(spark):
+    """Routing the skewed conversations to the ordered leg (run in a
+    worker thread while the rest checkpoints) must return exactly the
+    unrouted result on the same data — same rows."""
     from ocsf_validator_spark.violations import all_violations
 
     df = synth_transcripts(spark, n_turns=6000, seed=7)
@@ -204,6 +202,6 @@ def test_all_violations_concurrent_skew_equivalence(spark):
         for r in df.groupBy("conv_id").count().filter(F.col("count") > 200).collect()
     ]
     assert skewed, "fixture must contain a skewed conversation"
-    con = all_violations(df, suite, skewed_convs=skewed, concurrent_skew=True)
-    ser = all_violations(df, suite, skewed_convs=skewed, concurrent_skew=False)
-    assert _diff(con, ser) == 0
+    routed = all_violations(df, suite, skewed_convs=skewed)
+    plain = all_violations(df, suite)
+    assert _diff(routed, plain) == 0

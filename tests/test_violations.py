@@ -103,6 +103,67 @@ def test_fused_null_idx_duplicate_keeps_peer_string(spark):
     assert "first null" in uniq[0].reason  # the kept peer's text tie
 
 
+def test_unresolved_tie_column_is_reported_not_raised(transcripts):
+    """transcript_suite() on a table without ts: the Unique (whose
+    first_seen_order names ts) and monotonic.ts are reported as
+    unresolved findings, and the rest of the conversation window still
+    runs."""
+    got = _by_id(all_violations(transcripts.drop("ts"), SUITE).collect())
+    for cid in ("unique.conv_turn", "monotonic.ts"):
+        assert [r.reason for r in got[cid]] == [
+            "column(s) ts do not resolve in schema; constraint not evaluated"
+        ]
+        assert got[cid][0].conv_id is None
+    order = {(r.conv_id, r.turn_idx) for r in got["order.turn_idx"]}
+    assert {("c004", 1), ("c007", 3)} <= order
+
+
+def test_unresolved_window_column_is_reported(transcripts):
+    """A sequence constraint whose order column is missing is left out
+    of the window passes and reported, like any unresolved column."""
+    from ocsf_validator_spark.spec import ConstraintSet, Precedence
+
+    prec = Precedence(column="role", trigger="tool", prereq=("user",), order_by="seq")
+    suite = ConstraintSet(name="missing_order", constraints=[prec])
+    got = [(r.constraint_id, r.reason) for r in all_violations(transcripts, suite).collect()]
+    assert got == [
+        (prec.constraint_id, "column(s) seq do not resolve in schema; constraint not evaluated")
+    ]
+
+
+def test_uniques_with_different_tie_orders_keep_their_own(spark):
+    """Two Uniques on the conversation window with different
+    first_seen_order: each names the first-seen peer under its own
+    order, exactly as unique_violations does."""
+    from ocsf_validator_spark.spec import ConstraintSet, TurnOrdering, Unique
+    from ocsf_validator_spark.violations import unique_violations
+
+    keys = ("conv_id", "turn_idx")
+    by_role = Unique(column="by_role", keys=keys, first_seen_order=("role",))
+    by_text = Unique(column="by_text", keys=keys, first_seen_order=("text",))
+    suite = ConstraintSet(
+        name="two_uniques",
+        constraints=[by_role, by_text, TurnOrdering(column="turn_idx")],
+    )
+    df = spark.createDataFrame(
+        [("c1", 0, "a", "y"), ("c1", 0, "b", "x")],
+        "conv_id string, turn_idx int, role string, text string",
+    )
+    got = {
+        r.constraint_id: r.reason
+        for r in group_violations(df, suite).collect()
+        if r.constraint_id.startswith("unique.")
+    }
+    assert got == {
+        "unique.by_role": "duplicate key (c1,0) occurrence 2; first seen a",
+        "unique.by_text": "duplicate key (c1,0) occurrence 2; first seen x",
+    }
+    for c in (by_role, by_text):
+        assert [r.reason for r in unique_violations(df, c).collect()] == [
+            got[c.constraint_id]
+        ]
+
+
 def test_dataset_findings(transcripts):
     rows = dataset_findings(transcripts, SUITE).collect()
     got = _by_id(rows)
